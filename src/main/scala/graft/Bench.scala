@@ -6,82 +6,34 @@ import org.apache.spark.sql.SparkSession
   * A failing query is recorded as an error (negative time + errors map)
   * instead of being silently swallowed, and flips the exit code.
   *
-  * Measurement protocol (round-7 rework — the round-3 and round-6 verdicts
-  * both flagged 3-8x swings on UNCHANGED code in the recorded artifact):
+  * Timing protocol: one untimed compile pass over all queries, then
+  * SPARK_GRAFT_BENCH_REPS full passes (default 5), each pass's query
+  * order cyclically shifted by `(pass-1) * N / reps`; each query's
+  * headline number is the lower-middle MEDIAN of its reps. A variance
+  * guard then re-runs any query whose median exceeds
+  * SPARK_GRAFT_BENCH_HEALTH (default 2.0) times its own min, in up to
+  * SPARK_GRAFT_BENCH_GUARD (default 3) extra passes over just those
+  * queries. The history of each rule is in CHANGELOG.md.
   *
-  *  - Round-9 additions, closing the round-8 verdict's "JIT-churn" finding
-  *    (the r8 gate artifact overstated the contract ~40% and single queries
-  *    up to 5x): (a) `spark.sql.codegen.cache.maxEntries` is raised from
-  *    its default 100 to 20000 — with 234 queries the bounded generated-
-  *    class cache evicted every query's compiled stages between its own
-  *    interleaved reps, forcing full Janino recompilation per rep; (b) one
-  *    UNTIMED compile pass over all queries runs before the timed reps
-  *    (SPARK_GRAFT_BENCH_WARM=0 disables), so every timed rep is
-  *    steady-state. jit_ms stays in the artifact as proof.
-  *  - Each query runs SPARK_GRAFT_BENCH_REPS times (default 5 from
-  *    round 10; was 3), and reps are INTERLEAVED as full passes over the
-  *    query list: a transient machine-load window (CPU contention from a
-  *    co-resident process, page-cache eviction) spans a contiguous time
-  *    window, and back-to-back reps would both land inside it —
-  *    interleaving puts a query's reps minutes apart, so at most ONE rep
-  *    of a query is inflated by any window shorter than a full pass.
-  *  - Round-10 addition, closing the round-9 verdict's residual finding
-  *    (ambient-load windows SPANNING most of a pass hit the same
-  *    time-contiguous query block — q172..q224 — in 2 of 3 passes, so
-  *    the median kept the inflated value: q215 reps [2.1, 18.0, 16.9]):
-  *    the query ORDER IS ROTATED each pass by a deterministic cyclic
-  *    shift of `(pass-1) * N / reps` positions. A slow wall-clock window
-  *    now lands on a DIFFERENT contiguous block of query IDENTITIES each
-  *    pass, so no single query collects two inflated reps from one
-  *    recurring window; combined with 5 reps the lower-middle median
-  *    (3rd smallest of 5) tolerates two inflated reps per query. The
-  *    shift is a pure function of (pass, N, reps) — runs remain
-  *    reproducible and per-query rep vectors stay chronological.
-  *  - Round-13 additions, closing the round-12 verdict's contaminated-
-  *    record finding (11 queries in one contiguous wall-clock block ran
-  *    2-6x their own in-run min in the official artifact): (a) a
-  *    VARIANCE GUARD — after the main passes, any query whose median
-  *    exceeds 2x its own min gets extra full reps (up to
-  *    SPARK_GRAFT_BENCH_GUARD extra passes, default 3, each over just
-  *    the still-unstable queries) appended to its rep vector; minutes
-  *    separate the guard reps from the contaminated window, so the
-  *    recomputed median sheds the inflation. The artifact records
-  *    per-query median/min "health", "guard_passes", and
-  *    "guard_requeried"; a record where the guard gave up says so
-  *    ("n_unstable" > 0 in the compact line) instead of shipping a
-  *    silently inflated number. (b) a second per-pass ruler
-  *    "calib_mem_sec" — a 1 GB sequential sweep over a 256 MB buffer —
-  *    because the r12 drift audit showed the int-mix calib
-  *    under-measures the bandwidth dimension that dominates sub-second
-  *    scan/shuffle queries (they moved 15-20% between windows whose int
-  *    calib agreed; see SCALING.md "Round-13 drift audit").
-  *  - The headline per-query number is the MEDIAN of the reps (lower
-  *    middle for even N). With 3+ interleaved reps the median discards
-  *    both the one-time-cost outlier (Janino codegen compilation, C2 JIT
-  *    of the hot loops, cold page cache — observed at 1-13 s of background
-  *    JIT landing on arbitrary queries) and any single ambient-load
-  *    outlier, while min-of-N could still report a lucky never-reached
-  *    steady state and hides run-to-run variance entirely.
-  *  - Every artifact embeds the FULL evidence: per-query per-rep times
-  *    ("reps_by_query"), per-rep JIT/GC deltas ("jit_ms"/"gc_ms"), the
-  *    /proc/loadavg and a fixed CPU reference-kernel time at the start
-  *    of each pass ("loadavg"/"calib_sec" — divide two artifacts'
-  *    numbers by their calib ratio to compare across machine-speed
-  *    windows), plus min and pass-1 maps (key "first_rep" when the warm
-  *    pass ran — post-compile — or "cold" when it didn't) — so an inflated number
-  *    is attributable to JVM costs vs ambient load vs machine drift vs
-  *    real work from the artifact alone.
-  *  - stdout gets a COMPACT summary line (total + slowest queries,
-  *    greedily packed under the driver recorder's measured 2000-char
-  *    stdout tail buffer — all seven BENCH_r{1..7}.json artifacts were
-  *    head-truncated to "parsed": null before this fix). The complete
-  *    evidence line is WRITTEN TO A FILE (SPARK_GRAFT_BENCH_OUT, default
-  *    bench_full_latest.json in the cwd), named in the stdout line's
-  *    "full" field — the committed file is the durable
-  *    regression-tracking record.
+  * The full artifact (SPARK_GRAFT_BENCH_OUT, default
+  * bench_full_latest.json) holds per-query medians, mins, the pass-1
+  * map ("first_rep" after the warm pass, "cold" without it), every
+  * rep's time ("reps_by_query") and JIT/GC deltas ("jit_ms"/"gc_ms"),
+  * per-pass /proc/loadavg and two machine-speed rulers ("calib_sec",
+  * an integer-mix kernel; "calib_mem_sec", a 1 GB memory sweep —
+  * divide two artifacts by a ruler's ratio to compare drift windows),
+  * per-query median/min "health", the guard's re-runs and the errors.
   *
-  * SPARK_GRAFT_BENCH_ONLY=qNN,qMM filters queries for local iteration;
-  * SPARK_GRAFT_BENCH_DIAG=1 additionally prints per-rep lines to stderr.
+  * STDOUT carries only a COMPACT line (total plus the slowest queries,
+  * errors first) packed under 1700 chars: the recorder keeps just the
+  * last 2000 chars of stdout, so a longer line loses its head.
+  *
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+  * SPARK_DRIVER_MEM, SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_BENCH_WARM=0
+  * (skip the compile pass), SPARK_GRAFT_BENCH_GUARD,
+  * SPARK_GRAFT_BENCH_HEALTH, SPARK_GRAFT_BENCH_OUT,
+  * SPARK_GRAFT_BENCH_ONLY=qNN,qMM (query filter) and
+  * SPARK_GRAFT_BENCH_DIAG=1 (per-rep lines to stderr).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -96,14 +48,9 @@ object Bench {
       // shuffling both sides — standard production setting for executors
       // with this much memory (local[32]/128 GiB here)
       .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // ROOT CAUSE of the round-8 bench inflation: the generated-class
-      // cache (CodeGenerator.cache) is bounded by this STATIC conf,
-      // default 100 entries. The contract has 234 queries x several
-      // codegen stages each, so with interleaved reps EVERY query's
-      // compiled stages were evicted between its own reps and re-Janino'd
-      // on each pass (q165: 10-31 s of JIT per rep in the r8 artifact).
-      // 20k entries keeps every stage resident across passes, so rep 1
-      // pays compilation once and reps 2+ measure steady state.
+      // The generated-class cache is bounded by this STATIC conf
+      // (default 100 entries); 20k keeps every query's compiled stages
+      // resident across the interleaved passes.
       .config("spark.sql.codegen.cache.maxEntries", "20000")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
@@ -148,12 +95,9 @@ object Bench {
       try java.nio.file.Files.readString(
         java.nio.file.Path.of("/proc/loadavg")).trim.split(" ").head
       catch { case _: Throwable => "?" }
-    // Fixed CPU reference kernel, timed once per pass: on this host the
-    // effective machine speed drifts 1.4-1.8x across windows with zero
-    // steal and an idle box (observed round 7), so the artifact carries
-    // its own ruler — divide any two artifacts' per-query seconds by
-    // their calib ratio to compare windows. Pure integer mix, JIT-warmed
-    // once, single-threaded (drift observed uniform across cores).
+    // Fixed CPU reference kernel, timed once per pass: the artifact
+    // carries its own machine-speed ruler. Pure integer mix, JIT-warmed
+    // once, single-threaded.
     def calibSec: Double = {
       def mix(n: Long): Long = {
         var z = 0L; var i = 0L
@@ -170,17 +114,10 @@ object Bench {
       if (sink == 42L) System.err.println("") // defeat DCE
       s
     }
-    // Second ruler, round 13: MEMORY-BANDWIDTH reference kernel. The r12
-    // drift audit showed the int-mix calib under-measures the drift that
-    // matters to Spark: sub-second scan/shuffle queries moved 15-20%
-    // between windows whose int calib agreed — their cost is DRAM
-    // traffic, not ALU. A strided pass over a 256 MB long array (far
-    // past LLC) exposes that dimension; divide artifacts by the ratio
-    // of whichever ruler matches the queries being compared.
-    // 256 MB, allocated ONCE and pinned for the run: 3% of the forked
-    // JVM's -Xmx8g (build.sbt), a constant old-gen resident — strictly
-    // less timing perturbation than a per-pass alloc/free cycle, whose
-    // 256 MB of garbage would get collected DURING someone's timed rep.
+    // Second ruler: MEMORY-BANDWIDTH reference kernel — sequential
+    // sweeps over a 256 MB long array (far past LLC), the DRAM-traffic
+    // dimension the int-mix ruler misses. Allocated ONCE and pinned for
+    // the run, so no 256 MB of garbage is collected during a timed rep.
     val calibMemBuf = new Array[Long](32 << 20)
     def calibMemSec: Double = {
       var warm = 0L
@@ -202,12 +139,9 @@ object Bench {
     // lower-middle median: reps=3 -> 2nd smallest, reps=2 -> min, reps=1 -> the value
     def median(ts: Vector[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt.max(1)
-    // One untimed compile pass before the timed reps (round-8 verdict ask):
-    // together with the enlarged codegen cache above, it moves ALL Janino /
-    // C2 compilation of every query's stages ahead of the first timed rep,
-    // so all timed reps are steady-state and the median stops carrying a
-    // 1-in-3 compile outlier. Disable with SPARK_GRAFT_BENCH_WARM=0 for
-    // quick local iteration.
+    // One untimed compile pass before the timed reps: with the enlarged
+    // codegen cache above, all Janino / C2 compilation lands ahead of
+    // the first timed rep. Disable with SPARK_GRAFT_BENCH_WARM=0.
     val warm = !sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("0")
 
     var errors = List.empty[(String, String)]
@@ -275,15 +209,10 @@ object Bench {
         f"BENCHDIAG pass $rep loadavg=${loadByPass.last} calib=${calibByPass.last}%.3f s calib_mem=${calibMemByPass.last}%.3f s shift=$shift")
       passOrder.foreach { case (name, fn) => timeOne(name, fn, s"rep$rep") }
     }
-    // ---- VARIANCE GUARD (round 13; the r12 gate record was contaminated
-    // by a multi-minute host-interference window that inflated 11
-    // queries' medians 2-6x their own in-run min). A query whose median
-    // exceeds 2x its min after the main passes gets extra full reps —
-    // run minutes later, far from the window — appended to its rep
-    // vector until the (recomputed) median settles under the bound or
-    // the guard budget runs out. The artifact records per-query
-    // median/min health plus which queries the guard re-ran, so a
-    // record where the guard gave up is self-describing.
+    // ---- VARIANCE GUARD: a query whose median exceeds the health bound
+    // times its min after the main passes gets extra full reps appended
+    // to its rep vector until the recomputed median settles under the
+    // bound or the guard budget runs out.
     def health(name: String): Double = {
       val ts = timesByQuery(name)
       // errored: distinct sentinel (-1), NOT 1.0 — an errored query must
@@ -315,11 +244,8 @@ object Bench {
     }
     val results = selected.map { case (name, _) => name -> agg(name, median) }
     val mins = selected.map { case (name, _) => name -> agg(name, _.min) }
-    // Pass-1 per-query times. Field name depends on the protocol: with the
-    // untimed warm pass enabled (round 9+) pass 1 is already post-compile,
-    // so calling it "cold" would silently compare different quantities
-    // across rounds (r8 "cold" included Janino/C2 compilation; r9+ does
-    // not). warm=true -> "first_rep"; warm=false -> genuine "cold".
+    // Pass-1 per-query times: post-compile "first_rep" when the warm pass
+    // ran, genuine "cold" when it didn't.
     val coldTimes = selected.map { case (name, _) => name -> timesByQuery(name).head }
     val firstRepKey = if (warm) "first_rep" else "cold"
 
@@ -349,18 +275,12 @@ object Bench {
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val line =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"agg":"median","min":$minJson,"$firstRepKey":$cold,"reps":$reps,"warm_pass":$warm,"warm_sec":${num(warmSec)},"guard_passes":$guardPasses,"guard_requeried":$guardedJson,"health":$healthJson,"reps_by_query":$repsJson,"jit_ms":$jitJson,"gc_ms":$gcJson,"loadavg":$loadJson,"calib_sec":$calibJson,"calib_mem_sec":$calibMemJson,"errors":$errJson,"sf":"${esc(sfDir)}"}"""
-    // STDOUT LINE MUST FIT THE DRIVER'S 2000-CHAR TAIL BUFFER. Every
-    // BENCH_r{1..7}.json artifact has "parsed": null because the recorder
-    // keeps only the last 2000 chars of stdout (measured: tail_len=2000 in
-    // all seven artifacts) and our full-evidence line is ~10 KB, so its
-    // head — including the "metric"/"value" keys — was cut off every
-    // round. Fix: stdout gets a COMPACT line (summary + the slowest
-    // queries, greedily packed to a ~1700-byte cap that leaves room for
-    // sbt's trailing "[success] Total time" line inside the buffer); the
-    // FULL evidence line goes to the committed bench_full artifact, which
-    // the compact line names in "full". Errored queries (negative median)
-    // are force-included ahead of slow ones so a failure is never pushed
-    // out of the visible window by packing.
+    // STDOUT LINE MUST FIT THE RECORDER'S 2000-CHAR TAIL BUFFER: a
+    // COMPACT line (summary + the slowest queries, greedily packed to a
+    // 1700-byte cap that leaves room for sbt's trailing "[success]" line);
+    // the FULL evidence line goes to the artifact named in "full".
+    // Errored queries (negative median) are packed first so a failure is
+    // never pushed out of the visible window.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full_latest.json")
     val ranked = results.sortBy { case (n, v) => (if (v < 0) 0 else 1, -v.abs) }
     val budget = 1700

@@ -1007,7 +1007,8 @@ object MultimodalOps {
     * offset — 5,000 clips collapsed onto ~400 distinct prints (one per
     * length), the EXACT affine-degeneracy trap the round-13 image
     * fixture already documented and fixed (the pair-count invariant
-    * `clean_pairs == n + const` in AudioScaleProbe was the tell). The
+    * `clean_pairs == n + const` in the scale probe was the tell —
+    * SCALING.md, "Audio fingerprint family (q261/q262, round 14)"). The
     * cubic mixer decorrelates windows across families; the last
     * window additionally carries `3000 · variant`. Max amplitude
     * 40·256 + 6000 stays inside 16-bit PCM.

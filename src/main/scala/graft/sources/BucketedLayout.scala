@@ -54,7 +54,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * partitions to match, so the whole join runs at bucket-count
   * parallelism (asserted structurally in BucketedJoinSpec; q255 is the
   * oracle-gated contract query). DECISION RULE, as MEASURED
-  * (MixedJoinProbe, SCALING.md round 13): for the mixed join itself
+  * (SCALING.md, "Mixed bucketed⋈unbucketed join (q255 shape, round
+  * 13)"): for the mixed join itself
   * the half-shuffle discount (only the delta moves) beat the
   * idle-core loss at every probed size — an 8-bucket fact joined
   * faster than both the plain join and the escape hatch up to 60M

@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
   * subsequent scan pays a task per file plus a footer read per task.
   *
   * `compactParquet` rewrites a directory to ceil(totalBytes /
-  * targetBytes) files and swaps it in atomically (write to `.tmp`,
-  * rename old away, rename tmp in, delete old — the K5 tmp+rename
-  * discipline at directory granularity). Readers racing the swap see
-  * either the old or the new directory, never a mix.
+  * targetBytes) files and swaps it in with
+  * [[CsvMeta.renameOverFallback]] (write to `.compact-tmp`, set the old
+  * directory aside to `.bak`, rename the new one in, delete the old —
+  * the K5 tmp+rename discipline at directory granularity). Readers
+  * never see a mix of old and new files.
   *
   * The rewrite uses `coalesce` when shrinking the file count (no
   * shuffle — each output task concatenates whole input files) and
@@ -38,16 +39,8 @@ object Compaction {
       if (n <= dataFiles.length) df.coalesce(n) // no shuffle: concat files
       else df.repartition(n)
     val tmp = new Path(dir + ".compact-tmp")
-    val bak = new Path(dir + ".compact-old")
-    fs.delete(tmp, true); fs.delete(bak, true)
     sized.write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(path, bak))
-      throw new java.io.IOException(s"compaction swap failed: $dir -> $bak")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(bak, path) // restore
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $dir")
-    }
-    fs.delete(bak, true)
+    CsvMeta.renameOverFallback(fs, tmp, path)
     n
   }
 }

@@ -195,7 +195,8 @@ object CsvMeta {
     * place (best-effort — a stale sidecar is cleared on the next call).
     * Every `fs.rename`/`fs.delete` boolean is checked — a discarded
     * `false` would report success while the data sits under the wrong
-    * name.
+    * name. `src`/`dst` may be files (the CSV sink) or directories
+    * (StateStore tables, [[Compaction]]); sidecar deletes are recursive.
     */
   private[graft] def renameOverFallback(fs: org.apache.hadoop.fs.FileSystem,
                                         src: Path, dst: Path,
@@ -205,7 +206,7 @@ object CsvMeta {
         s"renameOver: atomic rename failed and $src does not exist — " +
           s"$dst left untouched", cause)
     val bak = new Path(dst.toString + ".bak")
-    if (fs.exists(bak) && !fs.delete(bak, false))
+    if (fs.exists(bak) && !fs.delete(bak, true))
       throw new java.io.IOException(s"renameOver: could not clear stale $bak")
     val hadDst = fs.exists(dst)
     if (hadDst && !fs.rename(dst, bak))
@@ -220,7 +221,7 @@ object CsvMeta {
         s"renameOver: rename $src -> $dst returned false" +
           (if (hadDst) s" — $dst restored from $bak" else ""))
     }
-    if (hadDst) { fs.delete(bak, false); () } // best-effort cleanup
+    if (hadDst) { fs.delete(bak, true); () } // best-effort cleanup
   }
 
   /** K1 at scale: directory-of-parts append — each batch lands as new

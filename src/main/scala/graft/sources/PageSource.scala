@@ -50,11 +50,9 @@ object PageSource {
     */
   def scan(spark: SparkSession, productType: String,
            startPage: Int, endPage: Int,
-           fetch: Int => String,
-           numSlices: Int = 0): Dataset[PageHtml] = {
+           fetch: Int => String): Dataset[PageHtml] = {
     import spark.implicits._
-    val slices = if (numSlices > 0) numSlices
-                 else math.min(endPage - startPage + 1, spark.sparkContext.defaultParallelism)
+    val slices = math.min(endPage - startPage + 1, spark.sparkContext.defaultParallelism)
     val pages = spark.createDataset(startPage to endPage)
       .repartitionByRange(math.max(slices, 1), $"value")
     implicit val enc = Encoders.product[PageHtml]

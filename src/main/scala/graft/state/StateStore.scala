@@ -1,7 +1,10 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.CsvMeta
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental-pipeline state (SURVEY §2.10 T2-T4, §2.6 A3/A4), persisted
   * as three small parquet tables under one root directory:
@@ -20,39 +23,42 @@ import org.apache.spark.sql.functions._
   * so Catalyst broadcast-joins them against the big side automatically —
   * exactly how the reference uses its in-memory sets.
   *
-  * Writes go through a temp-dir + atomic-rename commit so a crashed job
-  * never leaves a half-written table (the same window the reference has
+  * Writes go to a temp dir, then replace the live table through
+  * [[graft.sources.CsvMeta.renameOverFallback]]'s set-aside protocol: a
+  * crashed job never leaves a half-written table, and at every step a
+  * complete copy of each table exists as `<table>` or `<table>.bak`,
+  * which readers fall back to (the same window the reference has
   * between download success and _save_state is documented in SURVEY §7.4).
   */
 class StateStore(spark: SparkSession, root: String) {
 
   private def path(table: String) = s"$root/$table"
 
+  private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private val sessionSchema = "product_type string, status string, " +
     "last_completed_page int, total_pages int, total_products long"
   private val keySchema = "url string"
   private val failedSchema = "url string, error string, retries int, last_attempt timestamp"
 
+  /** The live table, else the `.bak` copy a commit interrupted between
+    * its set-aside and its rename left behind (the only complete copy
+    * then), else the empty table.
+    */
   private def readOrEmpty(table: String, schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schema)).parquet(path(table))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+    val st = StructType.fromDDL(schema)
+    Seq(path(table), path(table) + ".bak").find(p => fs.exists(new Path(p)))
+      .map(spark.read.schema(st).parquet(_))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st))
   }
 
-  /** Atomic table replace: write to `<table>.tmp`, then rename over the
-    * old directory. Readers either see the old or the new table.
+  /** Table replace: write to `<table>.tmp`, then swap it in with the
+    * set-aside protocol; throws unless the new table is in place.
     */
   private def commit(df: DataFrame, table: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path(table) + ".tmp")
-    val dst = new org.apache.hadoop.fs.Path(path(table))
+    val tmp = new Path(path(table) + ".tmp")
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(tmp, dst)
+    CsvMeta.renameOverFallback(fs, tmp, new Path(path(table)))
   }
 
   // ---- T2: session offsets (resume support) ----

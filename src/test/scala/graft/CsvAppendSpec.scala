@@ -119,5 +119,22 @@ class CsvAppendSpec extends SparkSpec {
     CsvMeta.renameOverFallback(fs, src3, fresh)
     assert(new String(Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/fresh.csv")), "UTF-8") == "h\nfirst\n")
+
+    // (5) directories (StateStore tables, Compaction): the non-empty
+    // dst directory and a stale non-empty sidecar directory are both
+    // replaced, and the set-aside copy is cleaned up afterwards
+    def writeDir(d: String, body: String): Path = {
+      val o = fs.create(new Path(s"$d/part-0"))
+      o.write(body.getBytes("UTF-8")); o.close()
+      new Path(d)
+    }
+    val table = writeDir(s"$dir/table", "old")
+    writeDir(s"$dir/table.bak", "stale")
+    CsvMeta.renameOverFallback(fs, writeDir(s"$dir/table.tmp", "new"), table)
+    assert(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/table/part-0")), "UTF-8") == "new")
+    assert(!fs.exists(new Path(s"$dir/table.tmp")))
+    assert(!fs.exists(new Path(s"$dir/table.bak")),
+      "the set-aside directory is removed once the new one is in place")
   }
 }

@@ -56,4 +56,19 @@ class StateStoreSpec extends SparkSpec {
     val pending = st.filterPending(Seq("a", "c").toDF("url"), "url")
     assert(pending.as[String].collect().toSeq == Seq("c"))
   }
+
+  test("a commit interrupted after its set-aside keeps the completed set") {
+    val root = Files.createTempDirectory("graft-state").toString
+    val st = new StateStore(spark, root)
+    st.markCompleted(Seq("a", "b").toDF("url"))
+    // the crash window: the live table moved to .bak, the new one not
+    // yet renamed in — readers must still see the exactly-once guard
+    Files.move(java.nio.file.Paths.get(s"$root/completed"),
+      java.nio.file.Paths.get(s"$root/completed.bak"))
+    val resumed = new StateStore(spark, root)
+    assert(resumed.completed.as[String].collect().toSet == Set("a", "b"))
+    resumed.markCompleted(Seq("c").toDF("url"))
+    assert(resumed.completed.as[String].collect().toSet == Set("a", "b", "c"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/completed.bak")))
+  }
 }
